@@ -92,11 +92,6 @@ def asof_join(
         *[F.col(c).alias(out) for c, out in right_cols.items()],
     ).alias("_rv")
     left_side, right_side = (1, 0) if direction == "backward" else (0, 1)
-    # equal-(by, on) right duplicates resolve to the MAX payload struct
-    # in BOTH directions (the docstring contract): backward's last()
-    # takes the max of an ASCENDING _rv run, but forward's first() takes
-    # the min unless the run is DESCENDING — flip the tiebreak key.
-    rv_order = F.col("_rv") if direction == "backward" else F.desc("_rv")
     l = left.select(
         *by,
         F.col(on).alias("_ts"),
@@ -111,15 +106,18 @@ def asof_join(
         F.lit(None).cast(l.schema["_lv"].dataType).alias("_lv"),
         payload,
     )
-    w = Window.partitionBy(*by).orderBy("_ts", "_side", rv_order)
+    # both directions are a forward fill (last non-null up to the
+    # current row — an incrementally grown frame): forward runs it over
+    # the reversed (_ts, _side) order. _rv stays ASCENDING in both, so
+    # equal-(by, on) right duplicates resolve to the MAX payload struct
+    # either way (the docstring contract).
     if direction == "backward":
-        fill = F.last("_rv", ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        )
+        w = Window.partitionBy(*by).orderBy("_ts", "_side", "_rv")
     else:
-        fill = F.first("_rv", ignorenulls=True).over(
-            w.rowsBetween(0, Window.unboundedFollowing)
-        )
+        w = Window.partitionBy(*by).orderBy(F.desc("_ts"), F.desc("_side"), "_rv")
+    fill = F.last("_rv", ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, 0)
+    )
     matched = (
         l.unionByName(r).withColumn("_m", fill).filter(F.col("_side") == left_side)
     )
@@ -181,14 +179,15 @@ def _asof_nearest(
     back = F.last("_rv", ignorenulls=True).over(
         w.rowsBetween(Window.unboundedPreceding, 0)
     )
-    # the forward fill orders the duplicate run DESCENDING so first()
-    # resolves equal-ts right duplicates to the MAX payload struct, same
-    # as the backward fill (last() over ascending) — one extra local
+    # the forward fill is last() over the reversed (_ts, _side) order —
+    # an incrementally grown frame, not a per-row unbounded-following
+    # one. _rv stays ascending, so equal-ts right duplicates resolve to
+    # the MAX payload struct, same as the backward fill. One extra local
     # sort inside the same exchange (both windows share the partition
     # key), not an extra shuffle
-    w_fwd = Window.partitionBy(*by).orderBy("_ts", "_side", F.desc("_rv"))
-    fwd = F.first("_rv", ignorenulls=True).over(
-        w_fwd.rowsBetween(0, Window.unboundedFollowing)
+    w_fwd = Window.partitionBy(*by).orderBy(F.desc("_ts"), F.desc("_side"), "_rv")
+    fwd = F.last("_rv", ignorenulls=True).over(
+        w_fwd.rowsBetween(Window.unboundedPreceding, 0)
     )
     matched = (
         l.unionByName(r)

@@ -490,7 +490,7 @@ def q78_grid_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: union(events, grid) → one window per user ordered by
     (ts, is_grid, event_id): ffill carries (prev_ts, prev_val) forward,
-    a mirrored future-frame window picks (next_ts, next_val); the
+    the same ffill over the reversed order picks (next_ts, next_val); the
     interpolation is pure arithmetic. Exact-ts duplicates are
     pre-averaged so the bracketing values are deterministic.
 
@@ -500,8 +500,9 @@ def q78_grid_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-union window (union output drops partitioning info, so the
     window re-shuffles regardless of branch keys — a Spark planner
     property, not a query choice). All three move linear data; row
-    count = events + user·hours — no quadratic term. Both window frames
-    (ffill + mirrored future) share the ONE WindowExec sort."""
+    count = events + user·hours — no quadratic term. Both fills grow
+    their frame from the partition start (linear per user); the reversed
+    one adds a local sort inside the same user exchange."""
     ev = (
         _t(spark, sf_dir, "events")
         .groupBy("user_id", "ts")
@@ -537,9 +538,11 @@ def q78_grid_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("user_id").orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
+    # the next event is the last non-null over the REVERSED order — an
+    # incrementally grown frame, not a per-row unbounded-following one
     w_future = (
-        Window.partitionBy("user_id").orderBy(*order)
-        .rowsBetween(0, Window.unboundedFollowing)
+        Window.partitionBy("user_id").orderBy(*[c.desc() for c in order])
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
     ev_ts = F.when(F.col("is_grid") == 0, F.col("ts_us"))
     filled = unioned.select(
@@ -548,8 +551,8 @@ def q78_grid_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_grid",
         F.last("value", ignorenulls=True).over(w_past).alias("pv"),
         F.last(ev_ts, ignorenulls=True).over(w_past).alias("pt"),
-        F.first("value", ignorenulls=True).over(w_future).alias("nv"),
-        F.first(ev_ts, ignorenulls=True).over(w_future).alias("nt"),
+        F.last("value", ignorenulls=True).over(w_future).alias("nv"),
+        F.last(ev_ts, ignorenulls=True).over(w_future).alias("nt"),
     )
     interp = (
         F.when(F.col("pv").isNull(), F.col("nv"))

@@ -11,6 +11,13 @@ Column-for-column parity with the reference's 28-column feature table:
 - clean: parse ts, sort, per-zone ffill, dropna (src/pipeline_batch.py:36-68)
 - features: rolling mean/std 3/12 rows, lag1, diff (…:92-146)
 - post: per-zone bfill + fillna(0) on lag/diff cols, round 4dp (…:149-158)
+
+Cost: every frame here is bounded or grows from the partition start, so
+each zone's window work is linear in its row count. The bfill runs as a
+forward fill over the reversed (zone_id, timestamp) order — a second
+local sort inside the same zone_id exchange — never as an
+unbounded-following frame, which Spark recomputes per row (quadratic per
+zone; ``operators.windows.bfill``).
 """
 
 from __future__ import annotations
@@ -93,7 +100,7 @@ def engineer_features(df: DataFrame) -> DataFrame:
         "temp_change_rate", "power_change_rate",
     ]
     out = out.withColumns(
-        {c: F.coalesce(W.bfill(c, w), F.lit(0.0)) for c in fill_targets}
+        {c: F.coalesce(W.bfill(c, "zone_id", "timestamp"), F.lit(0.0)) for c in fill_targets}
     )
 
     # round engineered cols to 4dp (src/pipeline_batch.py:157-158)

@@ -777,14 +777,15 @@ WITH ev AS (
   SELECT user_id, ts_us, is_grid,
          LAST_VALUE(value, true) OVER w_past AS pv,
          LAST_VALUE(CASE WHEN is_grid = 0 THEN ts_us END, true) OVER w_past AS pt,
-         FIRST_VALUE(value, true) OVER w_future AS nv,
-         FIRST_VALUE(CASE WHEN is_grid = 0 THEN ts_us END, true) OVER w_future AS nt
+         LAST_VALUE(value, true) OVER w_future AS nv,
+         LAST_VALUE(CASE WHEN is_grid = 0 THEN ts_us END, true) OVER w_future AS nt
   FROM u
   WINDOW
     w_past AS (PARTITION BY user_id ORDER BY ts_us, is_grid, COALESCE(event_id, 4611686018427387904)
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-    w_future AS (PARTITION BY user_id ORDER BY ts_us, is_grid, COALESCE(event_id, 4611686018427387904)
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+    w_future AS (PARTITION BY user_id
+                 ORDER BY ts_us DESC, is_grid DESC, COALESCE(event_id, 4611686018427387904) DESC
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 )
 SELECT user_id, timestamp_micros(ts_us) AS grid_ts,
        ROUND(CASE WHEN pv IS NULL THEN nv

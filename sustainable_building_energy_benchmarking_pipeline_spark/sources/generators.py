@@ -193,63 +193,81 @@ def inject_faults(df: DataFrame, episodes: list[dict]) -> DataFrame:
     (zone, time-window) slice. Progression ramps use the time fraction
     through the window — the continuous form of the reference's
     ``np.linspace(0, 1, n_points)`` over a regular grid. Oscillation is
-    2·sin over 0..4π of the window (F18). All pure column expressions —
-    the 16 episode masks fold into one projection, zero extra passes.
+    2·sin over 0..4π of the window (F18).
+
+    ONE projection: every mask reads only ``timestamp``/``zone_id``/
+    ``mode``, which no episode changes, so each updated column is its
+    base value plus one ``when(mask, delta).otherwise(0.0)`` term per
+    episode, summed in episode order (fault-type order, then list
+    order) — the same double additions a chain of per-episode updates
+    performs, since an unmasked ``x + 0.0`` is ``x``. ``power_kw`` is
+    (base + clogged-filter terms) × compressor factors, in that order;
+    ``fault_type`` is a CASE in which the latest episode wins. Building
+    one projection instead of ~60 chained ``withColumn`` calls keeps the
+    driver from re-analysing a growing plan per call.
     """
+    # every Column op is a driver round trip: shared sub-expressions are
+    # built once
     ts, z = F.col("timestamp"), F.col("zone_id")
+    ts_s, cooling, zero = ts.cast("double"), F.col("mode") == "cooling", F.lit(0.0)
 
-    def mask(ep: dict) -> F.Column:
-        m = (z == ep["zone"]) & (ts >= F.lit(ep["start"])) & (ts <= F.lit(ep["end"]))
-        if ep["fault"] == "compressor_failure":
-            m = m & (F.col("mode") == "cooling")
-        return m
+    terms: dict[str, list[F.Column]] = {
+        c: [] for c in ("temp_zone_c", "supply_air_temp_c", "return_air_temp_c",
+                        "power_kw", "fan_speed_pct")
+    }
+    power_factors, labels = [], []
+    for ep in [e for f in FAULT_TYPES for e in episodes if e["fault"] == f]:
+        fault, start = ep["fault"], F.lit(ep["start"])
+        m = (z == ep["zone"]) & (ts >= start) & (ts <= F.lit(ep["end"]))
+        if fault == "compressor_failure":
+            m = m & cooling
+        labels.append((m, fault))
+        if fault == "temp_drift":
+            deltas = {"temp_zone_c": F.lit(ep["drift"])}
+        else:
+            # time fraction through the episode window
+            span = (ep["end"] - ep["start"]).total_seconds()
+            p = (ts_s - start.cast("timestamp").cast("double")) / span
+            if fault == "clogged_filter":
+                deltas = {"fan_speed_pct": p * 20, "power_kw": p * 2, "return_air_temp_c": p * 1.5}
+            elif fault == "compressor_failure":
+                power_factors.append(F.when(m, 0.3).otherwise(1.0))
+                deltas = {"supply_air_temp_c": F.lit(5.0), "temp_zone_c": p * 4}
+            else:
+                osc = 2.0 * F.sin(p * 4 * math.pi)
+                deltas = {"temp_zone_c": osc, "fan_speed_pct": osc * 5}
+        for c, d in deltas.items():
+            terms[c].append(F.when(m, d).otherwise(zero))
 
-    def frac(ep: dict) -> F.Column:
-        span = (ep["end"] - ep["start"]).total_seconds()
-        return (ts.cast("double") - F.lit(ep["start"]).cast("timestamp").cast("double")) / span
+    def total(c: str) -> F.Column:
+        x = F.col(c)
+        for t in terms[c]:
+            x = x + t
+        return x
 
-    out = df
-    for ep in [e for e in episodes if e["fault"] == "clogged_filter"]:
-        m, p = mask(ep), frac(ep)
-        out = (
-            out.withColumn("fan_speed_pct", F.when(m, F.col("fan_speed_pct") + p * 20).otherwise(F.col("fan_speed_pct")))
-            .withColumn("power_kw", F.when(m, F.col("power_kw") + p * 2).otherwise(F.col("power_kw")))
-            .withColumn("return_air_temp_c", F.when(m, F.col("return_air_temp_c") + p * 1.5).otherwise(F.col("return_air_temp_c")))
-            .withColumn("fault_type", F.when(m, "clogged_filter").otherwise(F.col("fault_type")))
-        )
-    for ep in [e for e in episodes if e["fault"] == "compressor_failure"]:
-        m, p = mask(ep), frac(ep)
-        out = (
-            out.withColumn("power_kw", F.when(m, F.col("power_kw") * 0.3).otherwise(F.col("power_kw")))
-            .withColumn("supply_air_temp_c", F.when(m, F.col("supply_air_temp_c") + 5).otherwise(F.col("supply_air_temp_c")))
-            .withColumn("temp_zone_c", F.when(m, F.col("temp_zone_c") + p * 4).otherwise(F.col("temp_zone_c")))
-            .withColumn("fault_type", F.when(m, "compressor_failure").otherwise(F.col("fault_type")))
-        )
-    for ep in [e for e in episodes if e["fault"] == "temp_drift"]:
-        m = mask(ep)
-        out = (
-            out.withColumn("temp_zone_c", F.when(m, F.col("temp_zone_c") + ep["drift"]).otherwise(F.col("temp_zone_c")))
-            .withColumn("fault_type", F.when(m, "temp_drift").otherwise(F.col("fault_type")))
-        )
-    for ep in [e for e in episodes if e["fault"] == "oscillating_control"]:
-        m, p = mask(ep), frac(ep)
-        osc = 2.0 * F.sin(p * 4 * math.pi)
-        out = (
-            out.withColumn("temp_zone_c", F.when(m, F.col("temp_zone_c") + osc).otherwise(F.col("temp_zone_c")))
-            .withColumn("fan_speed_pct", F.when(m, F.col("fan_speed_pct") + osc * 5).otherwise(F.col("fan_speed_pct")))
-            .withColumn("fault_type", F.when(m, "oscillating_control").otherwise(F.col("fault_type")))
-        )
+    power = total("power_kw")
+    for f in power_factors:
+        power = power * f
+    fault_type = F.col("fault_type")
+    if labels:
+        case = F.when(*labels[-1])
+        for m, fault in reversed(labels[:-1]):
+            case = case.when(m, fault)
+        fault_type = case.otherwise(fault_type)
 
     # final bounds + rounding (src/generate_hvac_data.py:215-222)
-    out = (
-        out.withColumn("fan_speed_pct", F.least(F.greatest(F.col("fan_speed_pct"), F.lit(0.0)), F.lit(100.0)))
-        .withColumn("power_kw", F.greatest(F.col("power_kw"), F.lit(0.0)))
-        .withColumn("temp_zone_c", F.least(F.greatest(F.col("temp_zone_c"), F.lit(15.0)), F.lit(35.0)))
-        .withColumn("supply_air_temp_c", F.least(F.greatest(F.col("supply_air_temp_c"), F.lit(10.0)), F.lit(25.0)))
+    numeric = {
+        "temp_zone_c": F.least(F.greatest(total("temp_zone_c"), F.lit(15.0)), F.lit(35.0)),
+        "rh_zone_pct": F.col("rh_zone_pct"),
+        "supply_air_temp_c": F.least(F.greatest(total("supply_air_temp_c"), F.lit(10.0)), F.lit(25.0)),
+        "return_air_temp_c": total("return_air_temp_c"),
+        "power_kw": F.greatest(power, F.lit(0.0)),
+        "fan_speed_pct": F.least(F.greatest(total("fan_speed_pct"), F.lit(0.0)), F.lit(100.0)),
+        "setpoint_c": F.col("setpoint_c"),
+    }
+    return df.withColumns(
+        {**{c: F.round(x, 2) for c, x in numeric.items()}, "fault_type": fault_type}
     )
-    numeric = ["temp_zone_c", "rh_zone_pct", "supply_air_temp_c",
-               "return_air_temp_c", "power_kw", "fan_speed_pct", "setpoint_c"]
-    return out.withColumns({c: F.round(c, 2) for c in numeric})
 
 
 def generate_hvac_data(

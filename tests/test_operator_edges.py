@@ -37,6 +37,50 @@ def test_detect_runs_null_breaks_run(spark):
 
 
 # ---------------------------------------------------------------------------
+# bfill (reversed-order forward fill) == pandas groupby().bfill()
+# ---------------------------------------------------------------------------
+
+_BFILL_GROUPS = {
+    "a": [None, None, 1.0, None, 2.0, None, None, 3.0, None, None],  # start/mid/end
+    "b": [None],                 # single-row null group stays null
+    "c": [None, None, None],     # all-null group stays null
+    "d": [4.0, None, 5.0],
+    "e": [6.0],
+}
+
+
+@pytest.mark.parametrize(
+    "order_by",
+    [lambda: "t", lambda: ["t_hi", "t_lo"], lambda: [F.col("t_hi"), F.col("t_lo")]],
+    ids=["name", "names", "columns"],
+)
+def test_bfill_matches_pandas_groupby_bfill(spark, order_by):
+    import pandas as pd
+
+    rows = [
+        (k, t, t // 4, t % 4, v)
+        for k, vals in _BFILL_GROUPS.items()
+        for t, v in enumerate(vals)
+    ]
+    # input order must not matter: the window orders by t
+    rows = rows[::-1][::2] + rows[::-1][1::2]
+    df = spark.createDataFrame(rows, "k STRING, t INT, t_hi INT, t_lo INT, v DOUBLE")
+    got = {
+        (r.k, r.t): r.filled
+        for r in df.select("k", "t", W.bfill("v", "k", order_by()).alias("filled")).collect()
+    }
+    pdf = pd.DataFrame(rows, columns=["k", "t", "t_hi", "t_lo", "v"]).sort_values(["k", "t"])
+    pdf["filled"] = pdf.groupby("k")["v"].bfill()
+    want = {
+        (k, t): (None if pd.isna(f) else f)
+        for k, t, f in pdf[["k", "t", "filled"]].itertuples(index=False)
+    }
+    assert got == want
+    assert got[("b", 0)] is None and all(got[("c", t)] is None for t in range(3))
+    assert got[("a", 8)] is None and got[("a", 0)] == 1.0
+
+
+# ---------------------------------------------------------------------------
 # cosine: zero-norm vectors score 0.0 instead of ANSI DIVIDE_BY_ZERO / NaN
 # ---------------------------------------------------------------------------
 

@@ -22,6 +22,7 @@ from sustainable_building_energy_benchmarking_pipeline_spark.plans.analytics imp
 from sustainable_building_energy_benchmarking_pipeline_spark.plans.sql_frontend import SPARK_SQL
 from sustainable_building_energy_benchmarking_pipeline_spark.session import load_tables
 from tests.oracle import normalize_result
+from tests.test_plan_hygiene import _PER_ROW_FRAME_MSG, per_row_frames
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -79,6 +80,15 @@ def test_sql_frontend_matches_dataframe(spark, name):
     a = normalize_result(df_api.columns, [tuple(r) for r in df_api.collect()])
     b = normalize_result(sql_api.columns, [tuple(r) for r in sql_api.collect()])
     assert a == b, f"{name}: SQL front-end diverges from DataFrame plan"
+
+
+@pytest.mark.parametrize("name", sorted(SPARK_SQL))
+def test_spark_sql_has_no_per_row_window_frame(spark, name):
+    """Plan-hygiene gate for the Spark-dialect texts: planned (not run)
+    over the sf0.001 views, none may hold a per-row recomputed frame."""
+    plan = spark.sql(SPARK_SQL[name])._jdf.queryExecution().executedPlan().toString()
+    hits = per_row_frames(plan)
+    assert not hits, f"SPARK_SQL[{name!r}] {_PER_ROW_FRAME_MSG}: {hits}"
 
 
 def test_q50_sql_raises_on_deep_chain(spark):
